@@ -12,6 +12,8 @@ delegates to the operator modules, so this file adds no logic of its own.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 
 from danae_spark import catalog as _catalog
@@ -45,6 +47,8 @@ class DataLakeEngine:
         self.spark = tune_for_session(spark)
         self.lake_dir = lake_dir
         self.embeddings = embeddings
+        self._index: _engine.SearchIndex | None = None  # built by the first search
+        self._index_lock = threading.Lock()
         # make danae_spark importable on Spark Python workers no matter
         # the caller's cwd — the frame verbs' Arrow closures pickle by
         # module reference (same guarantee the registered queries get)
@@ -108,7 +112,9 @@ class DataLakeEngine:
         )
 
     def matching_scores(self, type_weights: dict[str, float] | None = None) -> DataFrame:
-        return _matching.dataset_matching_scores(self.spark, self.lake_dir, type_weights)
+        return _matching.dataset_matching_scores(
+            self.spark, self.lake_dir, type_weights, embeddings=self.embeddings
+        )
 
     def search(
         self,
@@ -119,17 +125,23 @@ class DataLakeEngine:
         type_weights: dict[str, float] | None = None,
     ) -> DataFrame:
         """Combined content+metadata dataset search — for one query
-        dataset (the reference's POST /search) or the whole lake."""
-        out = _engine.dataset_search(
-            self.spark, self.lake_dir, k=k,
-            w_content=w_content, w_metadata=w_metadata,
-            type_weights=type_weights,
+        dataset (the reference's POST /search) or, with `dataset=None`,
+        for every dataset. The first call builds the engine's
+        `SearchIndex` (engine.py) from the lake and `embeddings`: the
+        column similarities and pairwise catalog BM25 scores, Σ columns
+        × M plus n² rows on the driver. Every call is answered from it
+        without a Spark job, with the rows of the batch plan
+        `engine.dataset_search`. Raises ValueError for an unknown
+        dataset, k < 1, a negative or non-finite weight, or an unknown
+        type_weights key."""
+        with self._index_lock:
+            if self._index is None:
+                self._index = _engine.SearchIndex.build(
+                    self.spark, self.lake_dir, self.embeddings
+                )
+        return self._index.search(
+            self.spark, dataset, k, w_content, w_metadata, type_weights
         )
-        if dataset is not None:
-            from pyspark.sql import functions as F
-
-            out = out.filter(F.col("q_table") == dataset)
-        return out
 
     def metadata_search(self, query: str, k: int = 20) -> DataFrame:
         return _metadata.bm25_search(self.spark, self.lake_dir, query=query, k=k)

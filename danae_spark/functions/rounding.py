@@ -22,6 +22,8 @@ for the DuckDB oracle text.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -32,6 +34,12 @@ def rnd(col: Column | str, d: int) -> Column:
     col = F.col(col) if isinstance(col, str) else col
     scale = float(10**d)
     return F.floor(col * F.lit(scale) + F.lit(0.5 + EPS)) / F.lit(scale)
+
+
+def rnd_py(x: float, d: int) -> float:
+    """`rnd` for a Python float, bit-equal to the Column version."""
+    scale = float(10**d)
+    return math.floor(x * scale + (0.5 + EPS)) / scale
 
 
 def rnd_sql(expr: str, d: int) -> str:

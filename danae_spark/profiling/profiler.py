@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import Window as W
 
 from danae_spark.catalog import load_table, widen
 from danae_spark.profiling.types import NUMERIC, columns_of_class
@@ -333,6 +334,45 @@ def quantile_signatures(
         )
     )
     return out.orderBy("table_name", "column_name")
+
+
+def _exact_quantile_signatures(melted: DataFrame, rounding: int | None = 4) -> DataFrame:
+    """`F.percentile(v, SIGNATURE_PS)` per (table_name, column_name) of a
+    long-form frame, by sort-based rank selection instead of the
+    aggregate's per-group value buffer: number the non-null values of a
+    column 0..n−1 in sort order, pick the values at the floor and ceil of
+    position p·(n−1), and interpolate them with percentile's own
+    arithmetic, `(hi − pos)·v_lo + (pos − lo)·v_hi`, skipping the combine
+    when pos is whole or both picks are equal. Bit-equal to
+    `F.percentile`; an all-null column gets null signatures."""
+    v = F.col("v")
+    by = W.partitionBy("table_name", "column_name")
+    ranked = melted.select(
+        "table_name",
+        "column_name",
+        "v",
+        (F.row_number().over(by.orderBy(v.asc_nulls_last())) - 1).alias("idx"),
+        F.count(v).over(by).alias("n"),
+    )
+    n = F.col("n")
+    picks, combine = [F.first(n).alias("n")], []
+    for i, (p, name) in enumerate(zip(SIGNATURE_PS, SIGNATURE_NAMES)):
+        pos = (n - 1) * F.lit(p)
+        lo, hi = F.floor(pos), F.ceil(pos)
+        picks += [
+            F.max(F.when(F.col("idx") == lo, v)).alias(f"lo{i}"),
+            F.max(F.when(F.col("idx") == hi, v)).alias(f"hi{i}"),
+        ]
+        v_lo, v_hi = F.col(f"lo{i}"), F.col(f"hi{i}")
+        q = F.when((lo == hi) | (v_lo == v_hi), v_lo).otherwise(
+            (hi - pos) * v_lo + (pos - lo) * v_hi
+        )
+        combine.append((rnd(q, rounding) if rounding is not None else q).alias(name))
+    return (
+        ranked.groupBy("table_name", "column_name")
+        .agg(*picks)
+        .select("table_name", "column_name", *combine)
+    )
 
 
 # ------------------------------------------------------------------ temporal

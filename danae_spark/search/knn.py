@@ -59,13 +59,6 @@ CATEGORICAL_NAMES = tuple(f"e{i}" for i in range(EMB_DIMS))
 # with all-1 defaults so unweighted behavior is unchanged)
 TYPE_WEIGHTS = {"Numeric": 1.0, "Temporal": 1.0, "Categorical": 1.0, "Spatial": 1.0}
 
-# session-scoped signature index: (applicationId, sf_dir, embeddings-id) →
-# the four cached signature frames. The reference trains its R-trees once
-# (content_search.py:219 train()) and serves every query from them; this
-# memo is that artifact — without it every search call rebuilds the plan
-# objects and re-fills the cache entries from parquet.
-_SIG_INDEX: dict[tuple, list] = {}
-
 
 def typed_signatures(
     spark: SparkSession,
@@ -79,23 +72,16 @@ def typed_signatures(
     the Categorical index in place of the md5 stand-in; `emb_dims` is
     its vector length (inferred from the first row when omitted).
 
-    Each frame is `.cache()`d — the reference has an explicit train()
-    step that builds its R-trees once (content_search.py:219); the cache
-    is the same index artifact. The frames are schema-sized (one row per
-    column — tiny at ANY data scale) but expensive to produce (a full
-    profiling pass), and every search joins them on BOTH sides; the
-    cache fills on first execution and the session's cache manager
-    dedupes by canonicalized plan, so later searches (and the second
-    join branch, once populated) read the materialized index instead of
-    re-profiling the lake."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        id(embeddings) if embeddings is not None else None,
-    )
-    hit = _SIG_INDEX.get(key)
-    if hit is not None:
-        return hit
+    Each frame is `.cache()`d. The frames are schema-sized (one row per
+    column — tiny at ANY data scale) but cost a full profiling pass, and
+    every pair join reads them on BOTH sides. Spark's cache manager
+    matches a re-issued frame by its canonicalized plan, so a later call
+    in the same session with the same lake and embeddings reads the
+    materialized frames instead of profiling the lake again. Dataset
+    search does not call this per request: `DataLakeEngine` builds its
+    driver-side `SearchIndex` (engine.py) from these frames once, the
+    counterpart of the reference's one-time R-tree `train()`
+    (content_search.py:219), and serves every request from it."""
     if embeddings is not None and emb_dims is None:
         emb_dims = len(embeddings.select("vector").head().vector)
     dims = emb_dims if embeddings is not None else EMB_DIMS
@@ -104,7 +90,7 @@ def typed_signatures(
     # leaving them at scan parallelism makes every downstream window /
     # join stage schedule 32 near-empty tasks, which is most of the
     # dataset_search wall-clock
-    sigs = [
+    return [
         (quantile_signatures(spark, sf_dir).coalesce(1).cache(), SIGNATURE_NAMES, "Numeric"),
         (temporal_profile(spark, sf_dir).coalesce(1).cache(), SIGNATURE_NAMES, "Temporal"),
         (
@@ -117,8 +103,6 @@ def typed_signatures(
         ),
         (spatial_bboxes(spark, sf_dir).coalesce(1).cache(), SPATIAL_BBOX_NAMES, "Spatial"),
     ]
-    _SIG_INDEX[key] = sigs
-    return sigs
 
 
 def _sig_pairs(sigs: DataFrame, names: tuple[str, ...], col_type: str) -> DataFrame:

@@ -74,32 +74,46 @@ def _max_weight_matching(
     return total, n, pairs
 
 
+def match_group(
+    edges, type_weights: dict[str, float] | None = None
+) -> tuple[float, list[tuple]]:
+    """Max-weight matching of ONE (q_table, cand_table) group, given its
+    (q_column, col_type, cand_column, sim) edges: (score rounded to 6dp,
+    matched [((q_column, col_type), cand_column, w), ...]).
+
+    Edge weights follow the reference: each edge carries `w·sim` where w
+    is the per-type weight of the QUERY column producing the ranked list
+    (content_search.py:311 `w = weights[no]`, :321
+    `edges.append((.., w*sim, sim))`), and a candidate dataset scores the
+    sum of matched WEIGHTED edges (:345). Types missing from
+    `type_weights` weigh 1. Query columns are keyed by (name, type): a
+    table may expose the same column name in two type indexes."""
+    tw = TYPE_WEIGHTS if type_weights is None else type_weights
+    qcols, ccols, weights = set(), set(), {}
+    for q_column, col_type, cand_column, sim in edges:
+        key = ((q_column, col_type), cand_column)
+        qcols.add(key[0])
+        ccols.add(cand_column)
+        w = float(tw.get(col_type, 1.0)) * float(sim)
+        if w > weights.get(key, 0.0):
+            weights[key] = w
+    score, _, pairs = _max_weight_matching(sorted(qcols), sorted(ccols), weights)
+    return round(score, 6), pairs
+
+
 def matching_scores_from_sims(
     sims: DataFrame, type_weights: dict[str, float] | None = None
 ) -> DataFrame:
     """Max-weight bipartite matching per (q_table, cand_table) group over
-    a (q_table, q_column, col_type, cand_table, cand_column, sim) frame.
-
-    Edge weights follow the reference: each edge carries `w·sim` where w
-    is the per-type/per-column weight of the QUERY column producing the
-    ranked list (content_search.py:311 `w = weights[no]`, :321
-    `edges.append((.., w*sim, sim))`), and a candidate dataset scores the
-    sum of matched WEIGHTED edges (:345). All-1 defaults reproduce the
+    a (q_table, q_column, col_type, cand_table, cand_column, sim) frame,
+    one `match_group` call per group. All-1 defaults reproduce the
     unweighted behavior."""
-    tw = dict(TYPE_WEIGHTS if type_weights is None else type_weights)
 
-    def match_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        # disambiguate columns by (name, type) — a table may expose the
-        # same column name in two type indexes
-        qcols = sorted(set(zip(pdf["q_column"], pdf["col_type"])))
-        ccols = sorted(set(pdf["cand_column"]))
-        weights = {}
-        for r in pdf.itertuples():
-            key = ((r.q_column, r.col_type), r.cand_column)
-            w = float(tw.get(r.col_type, 1.0)) * float(r.sim)
-            if w > weights.get(key, 0.0):
-                weights[key] = w
-        score, _, pairs = _max_weight_matching(qcols, ccols, weights)
+    def match(pdf: pd.DataFrame) -> pd.DataFrame:
+        score, pairs = match_group(
+            zip(pdf["q_column"], pdf["col_type"], pdf["cand_column"], pdf["sim"]),
+            type_weights,
+        )
         matching = ";".join(
             f"{q[0]}~{c}@{w:.6f}" for (q, c, w) in sorted(pairs)
         )
@@ -107,7 +121,7 @@ def matching_scores_from_sims(
             {
                 "q_table": [pdf["q_table"].iloc[0]],
                 "cand_table": [pdf["cand_table"].iloc[0]],
-                "match_score": [round(score, 6)],
+                "match_score": [score],
                 "n_matched": [len(pairs)],
                 "matching": [matching],
             }
@@ -116,7 +130,7 @@ def matching_scores_from_sims(
     return (
         sims.groupBy("q_table", "cand_table")
         .applyInPandas(
-            match_group,
+            match,
             schema="q_table string, cand_table string, match_score double,"
             " n_matched int, matching string",
         )
@@ -125,14 +139,18 @@ def matching_scores_from_sims(
 
 
 def dataset_matching_scores(
-    spark: SparkSession, sf_dir: str, type_weights: dict[str, float] | None = None
+    spark: SparkSession,
+    sf_dir: str,
+    type_weights: dict[str, float] | None = None,
+    embeddings: DataFrame | None = None,
 ) -> DataFrame:
     """Score every (query_table, candidate_table) pair by max-weight
-    matching over their column similarities (all four column types)."""
+    matching over their column similarities (all four column types);
+    `embeddings` feeds the Categorical index (knn.typed_signatures)."""
     from danae_spark.shipping import ensure_shipped
 
     ensure_shipped(spark)  # pandas-UDF closure needs the package on workers
-    sims = content_similarity(spark, sf_dir).select(
+    sims = content_similarity(spark, sf_dir, embeddings=embeddings).select(
         "q_table", "q_column", "col_type", "cand_table", "cand_column", "sim"
     )
     return matching_scores_from_sims(sims, type_weights)

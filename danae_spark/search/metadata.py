@@ -24,6 +24,8 @@ the max-normalization and ranking so results are engine-stable.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -38,6 +40,17 @@ TITLE_TOKENS = 8
 FIELD_BOOSTS = {"title": 2.0, "keywords": 1.5, "body": 1.0}
 
 _TOKS = "filter(split(lower({src}), '[^a-z0-9]+'), t -> t <> '')"
+_SPLIT = re.compile(r"[^a-z0-9]+")
+
+
+def query_terms(query: str) -> list[str]:
+    """The distinct terms of a keyword query, sorted, tokenized as `_TOKS`
+    tokenizes the documents: lower-cased, split on non-alphanumerics.
+    Raises ValueError when the query has no term."""
+    terms = sorted({t for t in _SPLIT.split(query.lower()) if t})
+    if not terms:
+        raise ValueError(f"keyword query {query!r} has no terms")
+    return terms
 
 
 def _field_tokens(docs: DataFrame) -> DataFrame:
@@ -64,7 +77,7 @@ def _bm25_scored(
 ) -> DataFrame:
     """(doc_id, score) for every doc matching ≥1 query term."""
     boosts = dict(FIELD_BOOSTS if boosts is None else boosts)
-    terms = sorted(set(query.lower().split()))
+    terms = query_terms(query)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source", "lang")
     n_docs = docs.agg(F.count("*").alias("n_docs"))
 
@@ -187,7 +200,7 @@ def bm25_search_oracle(
     query: str = DEFAULT_QUERY, k: int = 20, boosts: dict[str, float] | None = None
 ) -> str:
     boosts = dict(FIELD_BOOSTS if boosts is None else boosts)
-    terms = sorted(set(query.lower().split()))
+    terms = query_terms(query)
     term_list = ", ".join(f"'{t}'" for t in terms)
     body = _TOKS_SQL.format(src="text")
     title = f"list_slice({body}, 1, {TITLE_TOKENS})"
