@@ -48,6 +48,7 @@ class DataLakeEngine:
         self.lake_dir = lake_dir
         self.embeddings = embeddings
         self._index: _engine.SearchIndex | None = None  # built by the first search
+        self._bm25_index: _metadata.Bm25Index | None = None  # by the first metadata_search
         self._index_lock = threading.Lock()
         # make danae_spark importable on Spark Python workers no matter
         # the caller's cwd — the frame verbs' Arrow closures pickle by
@@ -134,17 +135,39 @@ class DataLakeEngine:
         `engine.dataset_search`. Raises ValueError for an unknown
         dataset, k < 1, a negative or non-finite weight, or an unknown
         type_weights key."""
-        with self._index_lock:
-            if self._index is None:
-                self._index = _engine.SearchIndex.build(
-                    self.spark, self.lake_dir, self.embeddings
-                )
-        return self._index.search(
-            self.spark, dataset, k, w_content, w_metadata, type_weights
+        index = self._built(
+            "_index",
+            lambda: _engine.SearchIndex.build(self.spark, self.lake_dir, self.embeddings),
         )
+        return index.search(self.spark, dataset, k, w_content, w_metadata, type_weights)
 
     def metadata_search(self, query: str, k: int = 20) -> DataFrame:
-        return _metadata.bm25_search(self.spark, self.lake_dir, query=query, k=k)
+        """Keyword search over the lake's `documents` — boosted
+        multi-field BM25 (title / keywords / body), the reference's
+        metadata search. The first call builds the engine's document
+        `Bm25Index` (metadata.py): the BM25 impact of every (field,
+        term, doc) posting, on the driver. Every call is answered from
+        it without a Spark job, as the top-k (doc_id, score, norm_score,
+        rank) rows of the DuckDB reference `bm25_search_oracle`. Raises
+        ValueError for a query with no terms or k < 1."""
+        pairs = _metadata.keyword_pairs(query)
+        index = self._built(
+            "_bm25_index", lambda: _metadata.document_index(self.spark, self.lake_dir)
+        )
+        return index.top_k(self.spark, pairs, k)
+
+    def _built(self, name: str, build):
+        """The index held in attribute `name`, built by `build()` on first
+        use. Concurrent first callers wait for one build; later callers
+        read it without taking the lock."""
+        index = getattr(self, name)
+        if index is None:
+            with self._index_lock:
+                index = getattr(self, name)
+                if index is None:
+                    index = build()
+                    setattr(self, name, index)
+        return index
 
     # ------------------------------------------------------ dedup / ANN
     def dedup(self, method: str = "minhash", **kw) -> DataFrame:

@@ -23,11 +23,10 @@ from pyspark.sql import Window as W
 
 from danae_spark.catalog import load_table
 from danae_spark.functions import vectors
+from danae_spark.search.engine import W_CONTENT, W_METADATA
 from danae_spark.search.metadata import DEFAULT_QUERY, bm25_scores, bm25_search_oracle
 from danae_spark.functions.rounding import rnd
 
-W_CONTENT = 0.6
-W_METADATA = 0.4
 QUERY_VEC_ID = 0
 
 

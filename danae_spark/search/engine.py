@@ -44,6 +44,7 @@ from pyspark.sql import Window as W
 from danae_spark.functions.rounding import rnd, rnd_py
 from danae_spark.search.knn import TYPE_WEIGHTS, content_similarity
 from danae_spark.search.matching import dataset_matching_scores, match_group
+from danae_spark.search.metadata import CATALOG_BOOSTS, pairwise_dataset_bm25
 
 W_CONTENT = 0.6
 W_METADATA = 0.4
@@ -82,12 +83,7 @@ def _metadata_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise boosted multi-field BM25 over the catalog metadata —
     the metadata-relevance component, normalized per query by max_score
     (metadata_search.py:46). Replaces the r1 token-Jaccard stand-in."""
-    from danae_spark.search.metadata import pairwise_dataset_bm25
-
-    return pairwise_dataset_bm25(
-        _catalog_fields(spark, sf_dir),
-        boosts={"title": 2.0, "keywords": 1.5, "description": 1.0},
-    )
+    return pairwise_dataset_bm25(_catalog_fields(spark, sf_dir), boosts=CATALOG_BOOSTS)
 
 
 def _check_request(

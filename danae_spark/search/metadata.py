@@ -2,45 +2,67 @@
 
 Reference parity: `search/metadata_search.py:14-31` issues a boosted
 multi-field `match` query to Elasticsearch — one clause per metadata
-field (keywords / title / description), each with its own boost, in a
-bool/should with minimum_should_match=1 — and normalizes every hit's
-score by `max_score` (metadata_search.py:43-46).
+field, each with its own boost, in a bool/should with
+minimum_should_match=1 — and normalizes every hit's score by
+`max_score` (metadata_search.py:43-46).
 
-Spark-first redesign: ES's Lucene BM25 is re-expressed explicitly as
-DataFrame aggregations, PER FIELD, then combined with per-field boosts:
+Elasticsearch answers from an inverted index it built at ingest time,
+and so does this module: build the impacts once, then serve.
 
-    idf_f(t)    = ln(1 + (N - df_f + 0.5) / (df_f + 0.5))
-    score_f(d)  = Σ_t idf_f(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl_f/avgdl_f))
-    score(d)    = Σ_f boost_f · score_f(d)        (docs matching ≥1 term)
+- Build: `bm25_impacts` is the one Spark plan that holds the BM25
+  formula. From long-form (field, key, term) tokens it computes, per
+  field, the contribution of every posting with the boost baked in:
 
-with k1=1.2, b=0.75. The `documents` table has no separate metadata
-fields, so the three searchable fields are derived deterministically:
-title = first 8 text tokens, keywords = source + lang, body = full text.
-Corpus statistics (df per query term, avgdl, N — all per field) are tiny
-aggregates broadcast back to the doc-level join — one shuffle on
-(field, doc, term), no search service. Scores are rounded to 6dp before
-the max-normalization and ranking so results are engine-stable.
+      idf_f(t)       = ln(1 + (N - df_f + 0.5) / (df_f + 0.5))
+      impact_f(t, d) = boost_f · idf_f(t) · tf·(k1+1)
+                       / (tf + k1·(1 − b + b·dl_f/avgdl_f))
+
+  with k1=1.2, b=0.75, tf and df counts, dl = Σ tf per (field, key).
+- Serve: `Bm25Index` collects the impacts to the driver as postings
+  keyed by (field, term). A query is a list of (field, term) pairs; a
+  key's score is the sum of its impacts rounded to 6dp, normalized by
+  the best score of the query. No Spark job runs.
+
+Two corpora are indexed this way:
+
+- documents (keyword search). The `documents` table has no separate
+  metadata fields, so the three searchable fields are derived
+  deterministically: title = first 8 text tokens, keywords = source +
+  lang, body = full text. N counts every document. A keyword query
+  pairs every field with each of its terms, and the top-k ranks by
+  (-score, doc_id).
+- catalog (dataset search, `pairwise_dataset_bm25`). The title /
+  keywords / description fields of the datasets; N counts the
+  datasets. Each dataset queries with its own terms, field by field,
+  and drops itself from its answer.
+
+`bm25_search_oracle` is the independent DuckDB reference of the
+document search.
 """
 
 from __future__ import annotations
 
 import re
+from collections import defaultdict
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 from danae_spark.catalog import load_table
-from danae_spark.functions.rounding import rnd
+from danae_spark.functions.rounding import rnd_py
 
 K1 = 1.2
 B = 0.75
 DEFAULT_QUERY = "spark join filter stream"
 TITLE_TOKENS = 8
 FIELD_BOOSTS = {"title": 2.0, "keywords": 1.5, "body": 1.0}
+CATALOG_BOOSTS = {"title": 2.0, "keywords": 1.5, "description": 1.0}
 
 _TOKS = "filter(split(lower({src}), '[^a-z0-9]+'), t -> t <> '')"
 _SPLIT = re.compile(r"[^a-z0-9]+")
+_TOPK_SCHEMA = "doc_id long, score double, norm_score double, rank int"
 
 
 def query_terms(query: str) -> list[str]:
@@ -53,15 +75,24 @@ def query_terms(query: str) -> list[str]:
     return terms
 
 
+def keyword_pairs(query: str) -> list[tuple[str, str]]:
+    """The (field, term) pairs of a keyword query: every document field
+    with each of `query_terms(query)`."""
+    terms = query_terms(query)
+    return [(f, t) for f in FIELD_BOOSTS for t in terms]
+
+
 def _field_tokens(docs: DataFrame) -> DataFrame:
-    """Long-form (field, doc_id, term) over the three derived fields."""
+    """Long-form (field, key, term) over the three derived fields; the
+    key is the doc_id."""
     body_arr = F.expr(_TOKS.format(src="text"))
     title_arr = F.slice(body_arr, 1, TITLE_TOKENS)
     kw_arr = F.expr(_TOKS.format(src="concat_ws(' ', source, lang)"))
+    key = F.col("doc_id").alias("key")
     parts = [
-        docs.select(F.lit("title").alias("field"), "doc_id", F.explode(title_arr).alias("term")),
-        docs.select(F.lit("keywords").alias("field"), "doc_id", F.explode(kw_arr).alias("term")),
-        docs.select(F.lit("body").alias("field"), "doc_id", F.explode(body_arr).alias("term")),
+        docs.select(F.lit("title").alias("field"), key, F.explode(title_arr).alias("term")),
+        docs.select(F.lit("keywords").alias("field"), key, F.explode(kw_arr).alias("term")),
+        docs.select(F.lit("body").alias("field"), key, F.explode(body_arr).alias("term")),
     ]
     out = parts[0]
     for p in parts[1:]:
@@ -69,127 +100,108 @@ def _field_tokens(docs: DataFrame) -> DataFrame:
     return out
 
 
-def _bm25_scored(
-    spark: SparkSession,
-    sf_dir: str,
-    query: str = DEFAULT_QUERY,
-    boosts: dict[str, float] | None = None,
-) -> DataFrame:
-    """(doc_id, score) for every doc matching ≥1 query term."""
-    boosts = dict(FIELD_BOOSTS if boosts is None else boosts)
-    terms = query_terms(query)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source", "lang")
-    n_docs = docs.agg(F.count("*").alias("n_docs"))
-
-    # r17 perf (values identical, oracle untouched): the long-form token
-    # explode used to feed THREE aggregations (dl, tf, df) — the 3-field
-    # explode over the corpus ran three times. dl is just the token-array
-    # sizes (no explode, no shuffle of token rows; the dl > 0 filter
-    # reproduces the explode semantics exactly — a zero-token field
-    # produced no rows, so it never entered avgdl), and df collapses
-    # from tf (tf has exactly one row per (field, doc, term), so
-    # count(*) == the old count_distinct(doc_id) over raw tokens).
-    # The explode now runs once, pre-filtered to the query terms.
-    body_arr = F.expr(_TOKS.format(src="text"))
-    title_arr = F.slice(body_arr, 1, TITLE_TOKENS)
-    kw_arr = F.expr(_TOKS.format(src="concat_ws(' ', source, lang)"))
-    dl = (
-        docs.select(
-            "doc_id",
-            F.size(title_arr).alias("title"),
-            F.size(kw_arr).alias("keywords"),
-            F.size(body_arr).alias("body"),
-        )
-        .select(
-            "doc_id",
-            F.expr(
-                "stack(3, 'title', title, 'keywords', keywords, 'body', body)"
-                " AS (field, dl)"
-            ),
-        )
-        .filter(F.col("dl") > 0)
-        .select("field", "doc_id", F.col("dl").cast("long").alias("dl"))
+def bm25_impacts(tokens: DataFrame, n: int, boosts: dict[str, float]) -> DataFrame:
+    """(field, term, key, impact): the boosted BM25 contribution of every
+    distinct (field, key, term) of a long-form token frame, over a
+    corpus of `n` keys. Corpus statistics are per field; fields without
+    a boost are dropped."""
+    tf = (
+        tokens.filter(F.col("field").isin(*boosts))
+        .groupBy("field", "key", "term")
+        .agg(F.count("*").alias("tf"))
     )
+    dl = tf.groupBy("field", "key").agg(F.sum("tf").alias("dl"))
     avgdl = dl.groupBy("field").agg(F.avg("dl").alias("avgdl"))
-
-    qtoks = _field_tokens(docs).filter(F.col("term").isin(*terms))
-    tf = qtoks.groupBy("field", "doc_id", "term").agg(F.count("*").alias("tf"))
     df_ = tf.groupBy("field", "term").agg(F.count("*").alias("df"))
-
     boost = F.coalesce(
         *[F.when(F.col("field") == f, F.lit(b)) for f, b in boosts.items()]
     )
-    scored = (
-        tf.join(F.broadcast(df_), ["field", "term"])
-        .join(dl, ["field", "doc_id"])
-        .join(F.broadcast(avgdl), "field")
-        .crossJoin(F.broadcast(n_docs))
-        .withColumn(
-            "idf", F.log(1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        )
-        .withColumn(
-            "term_score",
-            boost
-            * F.col("idf")
-            * (F.col("tf") * (K1 + 1))
-            / (F.col("tf") + K1 * (1 - B + B * F.col("dl") / F.col("avgdl"))),
-        )
-        .groupBy("doc_id")
-        .agg(rnd(F.sum("term_score"), 6).alias("score"))
+    idf = F.log(1 + (F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5))
+    impact = (
+        boost
+        * idf
+        * (F.col("tf") * (K1 + 1))
+        / (F.col("tf") + K1 * (1 - B + B * F.col("dl") / F.col("avgdl")))
     )
-    return scored
+    return (
+        tf.join(df_, ["field", "term"])
+        .join(dl, ["field", "key"])
+        .join(F.broadcast(avgdl), "field")
+        .select("field", "term", "key", impact.alias("impact"))
+    )
+
+
+class Bm25Index:
+    """A `bm25_impacts` table on the driver: `postings[(field, term)]` is
+    the (keys, impacts) pair of numpy arrays of that term in that field."""
+
+    def __init__(self, impacts: DataFrame):
+        pdf = impacts.toPandas()
+        keys, impact = pdf["key"].to_numpy(), pdf["impact"].to_numpy()
+        self.postings = {
+            pair: (keys[rows], impact[rows])
+            for pair, rows in pdf.groupby(["field", "term"]).indices.items()
+        }
+
+    def scores(self, pairs, exclude=None) -> pd.DataFrame:
+        """(key, score, norm_score) of every key, other than `exclude`,
+        with a posting among the (field, term) `pairs`: its impacts
+        summed and rounded to 6dp, and that score over the best one,
+        rounded to 6dp too."""
+        hits = [self.postings[p] for p in pairs if p in self.postings]
+        keys, impact = (np.concatenate(a) for a in zip(*hits or [([], [])]))
+        keep = keys != exclude
+        keys, slot = np.unique(keys[keep], return_inverse=True)
+        score = [rnd_py(s, 6) for s in np.bincount(slot, impact[keep]).tolist()]
+        best = max(score, default=1.0)
+        return pd.DataFrame(
+            {
+                "key": keys,
+                "score": np.array(score, "float64"),
+                "norm_score": np.array([rnd_py(s / best, 6) for s in score], "float64"),
+            }
+        )
+
+    def top_k(self, spark: SparkSession, pairs, k: int) -> DataFrame:
+        """The k best documents of `scores(pairs)`, ranked by score, then
+        doc_id, as (doc_id, score, norm_score, rank) rows. Raises
+        ValueError for k < 1."""
+        if k < 1:
+            raise ValueError(f"k must be at least 1, got {k}")
+        top = (
+            self.scores(pairs)
+            .sort_values(["score", "key"], ascending=[False, True])
+            .head(k)
+            .rename(columns={"key": "doc_id"})
+        )
+        top["rank"] = np.arange(1, len(top) + 1, dtype="int32")
+        return spark.createDataFrame(top, _TOPK_SCHEMA)
+
+
+def document_index(spark: SparkSession, sf_dir: str) -> Bm25Index:
+    """The BM25 index of the lake's `documents`, N = every document."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source", "lang")
+    return Bm25Index(bm25_impacts(_field_tokens(docs), docs.count(), FIELD_BOOSTS))
 
 
 def bm25_search(
-    spark: SparkSession,
-    sf_dir: str,
-    query: str = DEFAULT_QUERY,
-    k: int = 20,
-    boosts: dict[str, float] | None = None,
+    spark: SparkSession, sf_dir: str, query: str = DEFAULT_QUERY, k: int = 20
 ) -> DataFrame:
-    return _ranked_topk(_bm25_scored(spark, sf_dir, query, boosts), k)
+    """Top-k keyword search over `documents`: builds the index and serves
+    one query from it."""
+    pairs = keyword_pairs(query)
+    return document_index(spark, sf_dir).top_k(spark, pairs, k)
 
 
 def bm25_scores(
-    spark: SparkSession,
-    sf_dir: str,
-    query: str = DEFAULT_QUERY,
-    boosts: dict[str, float] | None = None,
+    spark: SparkSession, sf_dir: str, query: str = DEFAULT_QUERY
 ) -> DataFrame:
     """Unranked (doc_id, score, norm_score) over EVERY matching doc —
-    the full-score surface combined_topk consumes. Normalization uses a
-    broadcast scalar max (map-side-partial agg + 1-row broadcast join),
-    not a global window, so no stage ever collapses to one partition
-    no matter the corpus size."""
-    scored = _bm25_scored(spark, sf_dir, query, boosts)
-    mx = scored.agg(F.max("score").alias("max_score"))
-    return scored.crossJoin(F.broadcast(mx)).select(
-        "doc_id",
-        "score",
-        rnd(F.col("score") / F.col("max_score"), 6).alias("norm_score"),
-    )
-
-
-def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
-    """Top-k of a (doc_id, score) frame WITHOUT a global window: the
-    max-score normalizer is a broadcast scalar, and rank is derived on
-    the post-`limit(k)` frame — `orderBy().limit(k)` compiles to
-    TakeOrderedAndProject (parallel partial top-k per partition), so
-    the only single-partition work is the k-row tail. Replaces the
-    r16-flagged `row_number().over(W.partitionBy().orderBy(...))`
-    pattern, which moved the WHOLE score table to one partition."""
-    mx = scored.agg(F.max("score").alias("max_score"))
-    top = (
-        scored.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .crossJoin(F.broadcast(mx))
-        .withColumn("norm_score", rnd(F.col("score") / F.col("max_score"), 6))
-    )
-    w = W.partitionBy().orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        top.withColumn("rank", F.row_number().over(w))
-        .select("doc_id", "score", "norm_score", "rank")
-        .orderBy("rank")
+    the full-score surface combined_topk consumes."""
+    pairs = keyword_pairs(query)
+    scores = document_index(spark, sf_dir).scores(pairs)
+    return spark.createDataFrame(
+        scores.rename(columns={"key": "doc_id"}), "doc_id long, score double, norm_score double"
     )
 
 
@@ -264,58 +276,24 @@ def pairwise_dataset_bm25(
     normalized per query by the max candidate score.
 
     `fields` is a long-form (dataset, field, field_text) frame; corpora
-    are per field. Dataset counts scale with schema count, not data
-    volume, so every side here is broadcast-sized at any SF."""
-    boosts = dict(FIELD_BOOSTS if boosts is None else boosts)
-    toks = fields.select(
-        "dataset",
+    are per field, N is the number of datasets, and `boosts` defaults
+    to CATALOG_BOOSTS. Dataset counts scale with schema count, not data
+    volume, so the index is small at any SF."""
+    tokens = fields.select(
         "field",
+        F.col("dataset").alias("key"),
         F.explode(F.expr(_TOKS.format(src="field_text"))).alias("term"),
     )
-    n = toks.select("dataset").distinct().agg(F.count("*").alias("n_ds"))
-    dl = toks.groupBy("field", "dataset").agg(F.count("*").alias("dl"))
-    avgdl = dl.groupBy("field").agg(F.avg("dl").alias("avgdl"))
-    tf = toks.groupBy("field", "dataset", "term").agg(F.count("*").alias("tf"))
-    df_ = tf.groupBy("field", "term").agg(F.count("*").alias("df"))
-
-    q_terms = toks.select(
-        F.col("dataset").alias("q_table"), "field", "term"
-    ).distinct()
-    boost = F.coalesce(
-        *[F.when(F.col("field") == f, F.lit(b)) for f, b in boosts.items()]
-    )
-    pair_scores = (
-        q_terms.join(
-            tf.select(F.col("dataset").alias("cand_table"), "field", "term", "tf"),
-            ["field", "term"],
-        )
-        .filter(F.col("q_table") != F.col("cand_table"))
-        .join(F.broadcast(df_), ["field", "term"])
-        .join(
-            dl.select(F.col("dataset").alias("cand_table"), "field", "dl"),
-            ["field", "cand_table"],
-        )
-        .join(F.broadcast(avgdl), "field")
-        .crossJoin(F.broadcast(n))
-        .withColumn(
-            "idf", F.log(1 + (F.col("n_ds") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        )
-        .withColumn(
-            "term_score",
-            boost
-            * F.col("idf")
-            * (F.col("tf") * (K1 + 1))
-            / (F.col("tf") + K1 * (1 - B + B * F.col("dl") / F.col("avgdl"))),
-        )
-        .groupBy("q_table", "cand_table")
-        .agg(rnd(F.sum("term_score"), 6).alias("raw_score"))
-    )
-    wq = W.partitionBy("q_table")
-    return (
-        pair_scores.withColumn("max_score", F.max("raw_score").over(wq))
-        .withColumn(
-            "metadata_score",
-            rnd(F.col("raw_score") / F.col("max_score"), 6),
-        )
-        .select("q_table", "cand_table", "metadata_score")
+    n = fields.select("dataset").distinct().count()
+    index = Bm25Index(bm25_impacts(tokens, n, CATALOG_BOOSTS if boosts is None else boosts))
+    own = defaultdict(list)  # dataset -> the (field, term) pairs of its fields
+    for pair, (keys, _) in index.postings.items():
+        for key in keys:
+            own[key].append(pair)
+    rows = []
+    for q, pairs in own.items():
+        scores = index.scores(pairs, exclude=q)
+        rows += [(q, c, s) for c, s in zip(scores["key"], scores["norm_score"].tolist())]
+    return fields.sparkSession.createDataFrame(
+        rows, "q_table string, cand_table string, metadata_score double"
     )

@@ -1,12 +1,18 @@
 """Exactness of the bitmask-DP max-weight bipartite matching
-(danae_spark/search/matching.py) vs brute-force enumeration."""
+(danae_spark/search/matching.py) vs brute-force enumeration and
+networkx, the reference system's matcher."""
 
 from __future__ import annotations
 
 import itertools
 import random
 
-from danae_spark.search.matching import _max_weight_matching
+import networkx as nx
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
+
+from danae_spark.search.knn import TYPE_WEIGHTS
+from danae_spark.search.matching import _max_weight_matching, match_group
 
 
 def brute_force(qcols, ccols, weights):
@@ -88,3 +94,42 @@ def test_type_weighted_matching_parity(spark):
     out = matching_scores_from_sims(conflict, {"Numeric": 1.0, "Categorical": 100.0}).collect()[0]
     # a2→b1 (100·0.1 = 10.0) beats a1→b1 (0.9)
     assert abs(out.match_score - 10.0) < 1e-9 and out.n_matched == 1
+
+
+_edge = st.tuples(
+    st.integers(0, 5),
+    st.sampled_from(sorted(TYPE_WEIGHTS)),
+    st.integers(0, 5),
+    st.just(0.0) | st.floats(0.0, 1.0, allow_nan=False),
+)
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    edges=st.lists(_edge, max_size=36),
+    type_weights=st.none()
+    | st.dictionaries(st.sampled_from(sorted(TYPE_WEIGHTS)), st.floats(0.0, 3.0)),
+)
+@example(  # one (q, c) pair under two column types, a zero similarity, a parallel edge
+    edges=[
+        (0, "Numeric", 0, 0.7), (0, "Categorical", 0, 0.9), (1, "Numeric", 0, 0.0),
+        (1, "Numeric", 1, 0.8), (1, "Numeric", 1, 0.3),
+    ],
+    type_weights=None,
+)
+def test_match_group_equals_networkx(edges, type_weights):
+    """The matcher's score is the weight sum of networkx's max-weight
+    matching over the same w(type)·sim edges; a query column is a
+    (name, type) node, and parallel edges keep their best weight."""
+    rows = [(f"q{q}", t, f"c{c}", sim) for q, t, c, sim in edges]
+    tw = TYPE_WEIGHTS if type_weights is None else type_weights
+    g = nx.Graph()
+    for q, t, c, sim in rows:
+        w = tw.get(t, 1.0) * sim
+        u, v = ("q", q, t), ("c", c)
+        if w > 0.0 and w > g.get_edge_data(u, v, {"weight": 0.0})["weight"]:
+            g.add_edge(u, v, weight=w)
+    want = sum(g[u][v]["weight"] for u, v in nx.max_weight_matching(g))
+    score, pairs = match_group(rows, type_weights)
+    assert abs(score - want) <= 1e-6, (rows, score, want)
+    assert len({q for q, _, _ in pairs}) == len({c for _, c, _ in pairs}) == len(pairs)
